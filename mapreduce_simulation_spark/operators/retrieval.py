@@ -69,8 +69,9 @@ QUERY_TERMS: dict[int, list[str]] = {
 
 
 def _query_df(spark: SparkSession) -> DataFrame:
-    rows = [(q, t) for q, ts in QUERY_TERMS.items() for t in ts]
-    return spark.createDataFrame(rows, "query_id INT, term STRING")
+    # A JVM VALUES relation: createDataFrame(list) would scan an RDD that
+    # runs a Python worker on every action.
+    return spark.sql(f"SELECT query_id, term FROM {_query_values_sql()}")
 
 
 def _query_values_sql() -> str:

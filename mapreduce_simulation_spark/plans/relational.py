@@ -37,11 +37,28 @@ def _dec_sum(col, alias: str):
 
 
 def _money_units(col, scale: int):
-    """A money double as a LONG in 1/scale units: round(x · scale). The
-    parquet double sits within ~1e-9 of the true k-decimal grid value, so
-    the round never lands near a .5 boundary — the long equals the
-    decimal(…, k) cast's unscaled value exactly."""
-    return F.round(col * scale).cast("long")
+    """A money double as a LONG in 1/scale units: rint(x · scale), raising
+    USER_RAISED_EXCEPTION when x · scale is more than 0.25 from that
+    integer (an off-grid value such as 0.125 at scale 100).
+
+    Why it is exact: Spark's round(double) is HALF_UP applied to
+    Double.toString(v), which lies within ulp(v)/2 of v; under the guard
+    both land on the same integer (from 2^52 up, v is already one), so
+    the long equals round(v), and hence the decimal(…, k) cast's unscaled
+    value (parquet money doubles sit within ~1e-9 of the k-decimal grid:
+    max |x·100 − rint| is 9.3e-10 over the sf0.1 lineitem). Unlike
+    round, which runs BigDecimal.valueOf(d).setScale per row, rint, the
+    subtraction and the guard are plain codegen double arithmetic. Nulls
+    pass through as null; NaN and ±inf fail the guard.
+    """
+    v = col * scale
+    r = F.rint(v)
+    off_grid = F.raise_error(
+        F.concat(
+            F.lit(f"money value off the 1/{scale} grid: "), col.cast("string")
+        )
+    )
+    return F.when(F.abs(v - r) > 0.25, off_grid).otherwise(r).cast("long")
 
 
 def exact_money_sums(df, keys, sums, counts=()):
@@ -67,7 +84,11 @@ def exact_money_sums(df, keys, sums, counts=()):
     units), while maxPartitionBytes-sized splits hold ~1-2M rows; a 40×
     margin that holds at any corpus size because the bound is per split,
     not per dataset. The decimal merge level is what makes the GLOBAL
-    total overflow-free.
+    total overflow-free. Both preconditions are checked at runtime, not
+    assumed: session.py pins spark.sql.ansi.enabled, so a per-split long
+    partial that does overflow raises ARITHMETIC_OVERFLOW instead of
+    wrapping, and _money_units raises on a value off the money grid
+    instead of rounding it.
     """
     pid = F.spark_partition_id().alias("_pid")
     partials = [

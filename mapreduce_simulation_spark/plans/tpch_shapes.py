@@ -279,35 +279,35 @@ def sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The textbook form is a correlated EXISTS (another supplier on the
     order) + NOT EXISTS (another supplier with a returned line) — two
     extra scans of lineitem and two correlated joins. The Spark-first
-    plan collapses both into ONE per-order profile: distinct supplier
-    count and the distinct set of suppliers with 'R' lines; an order
-    blames supplier s iff its R-set == {s} and it has >1 supplier. Same
-    semantics (oracle below is the correlated form), one lineitem scan,
-    one |orders|-cardinality exchange instead of three.
+    plan collapses both into ONE per-order profile of four min/max
+    aggregates: over the order's supplier keys and over the supplier keys
+    of its 'R' lines. min/max skip nulls exactly as the correlated form's
+    ``<>`` does, so an order has >1 supplier ⇔ smin ≠ smax, its R-supplier
+    set is a single {s} ⇔ rmin = rmax (both non-null), and then s = rmin.
+    Same semantics (oracle below is the correlated form), one lineitem
+    scan, one |orders|-cardinality exchange instead of three.
 
-    Scale: the per-order R-supplier set is bounded by suppliers-per-
-    order (≤7 in TPC-H lineage); the final per-supplier count is a
-    |suppliers|-row aggregate. No self-join of the fact table at all.
+    Scale: the profile is four fixed-width key buffers per order, so the
+    aggregate is a codegen hash aggregate whose partials shuffle as plain
+    rows — no per-order set buffer, no object-hash aggregate. The final
+    per-supplier count is a |suppliers|-row aggregate. No self-join of
+    the fact table at all.
     """
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
-    # n_supp comes from the SIZE of a collected set, not countDistinct:
-    # mixing a distinct aggregate with collect_set makes Spark plan the
-    # aggregation through an Expand (every input row doubled, one copy
-    # per aggregate class); two plain collect_sets keep the single-pass
-    # partial/final shape. Both sets are bounded by suppliers-per-order.
+    r_supp = F.when(F.col("l_returnflag") == "R", F.col("l_suppkey"))
     profile = (
         li.groupBy("l_orderkey")
         .agg(
-            F.size(F.collect_set("l_suppkey")).alias("n_supp"),
-            F.array_sort(
-                F.collect_set(
-                    F.when(F.col("l_returnflag") == "R", F.col("l_suppkey"))
-                )
-            ).alias("r_supps"),
+            F.min("l_suppkey").alias("smin"),
+            F.max("l_suppkey").alias("smax"),
+            F.min(r_supp).alias("rmin"),
+            F.max(r_supp).alias("rmax"),
         )
-        .where((F.col("n_supp") > 1) & (F.size("r_supps") == 1))
-        .select(F.col("r_supps")[0].alias("l_suppkey"))
+        .where(
+            (F.col("smin") != F.col("smax")) & (F.col("rmin") == F.col("rmax"))
+        )
+        .select(F.col("rmin").alias("l_suppkey"))
     )
     return (
         profile.groupBy("l_suppkey")

@@ -58,6 +58,11 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Broadcast small dims (nation/region/supplier) automatically.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # ANSI arithmetic: a long overflow raises ARITHMETIC_OVERFLOW instead
+        # of wrapping — exact_money_sums' per-split long partials are exact
+        # only under it (plans/relational.py). Spark 4's default, pinned so
+        # a cluster default cannot turn it off.
+        .config("spark.sql.ansi.enabled", "true")
         # Timestamps: keep parquet INT96/µs semantics stable across engines.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -3,6 +3,8 @@ comparison can't express (invariants, completeness guarantees, plan shape)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from mapreduce_simulation_spark.functions import hashing as H
@@ -1258,10 +1260,10 @@ def test_exact_money_sums_matches_decimal_accumulation(spark):
     — the exactness contract pricing_summary/revenue_by_nation/promo/
     salted now rely on. Exercised over a deliberately skewed layout
     (repartition(7) of interleaved groups) so partial merges cross
-    partition boundaries."""
+    partition boundaries, with both signs, zero, nulls (one group all
+    null) and magnitudes up to ~1e11. A value off the cent grid must
+    raise USER_RAISED_EXCEPTION instead of being rounded onto it."""
     import random
-
-    from pyspark.sql import functions as F
 
     from mapreduce_simulation_spark.plans.relational import (
         _money_units,
@@ -1273,15 +1275,21 @@ def test_exact_money_sums_matches_decimal_accumulation(spark):
         (rng.choice("abcd"), round(rng.uniform(0.01, 99999.99), 2))
         for _ in range(5000)
     ]
+    rows += [
+        (rng.choice("abcd"), round(rng.uniform(-1e11, 1e11), 2))
+        for _ in range(2000)
+    ]
+    rows += [("a", 0.0), ("b", -0.01), ("c", None), ("d", None)]
+    rows += [("e", None), ("e", None)]
     df = spark.createDataFrame(rows, "k string, x double").repartition(7)
-    got = (
-        exact_money_sums(
-            df, ["k"], [(_money_units(F.col("x"), 100), 100, "s")],
+
+    def money_sums(frame):
+        return exact_money_sums(
+            frame, ["k"], [(_money_units(F.col("x"), 100), 100, "s")],
             counts=("n",),
         )
-        .orderBy("k")
-        .collect()
-    )
+
+    got = money_sums(df).orderBy("k").collect()
     want = (
         df.groupBy("k")
         .agg(
@@ -1292,6 +1300,84 @@ def test_exact_money_sums_matches_decimal_accumulation(spark):
         .collect()
     )
     assert got == want
+    assert got[-1]["k"] == "e" and got[-1]["s"] is None
+
+    off_grid = spark.createDataFrame([("a", 0.125)], "k string, x double")
+    with pytest.raises(PySparkException) as err:
+        money_sums(off_grid).collect()
+    assert err.value.getCondition() == "USER_RAISED_EXCEPTION"
+
+
+def test_exact_money_sums_partial_overflow_raises(spark):
+    """exact_money_sums' per-split LONG partials are exact only because
+    the session pins ANSI arithmetic: three 2^62 terms in ONE partition
+    overflow the partial, which must raise ARITHMETIC_OVERFLOW instead of
+    wrapping to a negative total."""
+    from mapreduce_simulation_spark.plans.relational import exact_money_sums
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.range(0, 3, 1, numPartitions=1).select(
+        F.lit("a").alias("k"), F.lit(2**62).alias("u")
+    )
+    with pytest.raises(PySparkException) as err:
+        exact_money_sums(df, ["k"], [(F.col("u"), 1, "s")]).collect()
+    assert err.value.getCondition() == "ARITHMETIC_OVERFLOW"
+
+
+def test_sole_blame_suppliers_edge_cases_match_correlated_oracle(
+    spark, tmp_path
+):
+    """The min/max per-order profile must agree with the correlated
+    EXISTS/NOT-EXISTS oracle on the cases a profile can get wrong: a
+    single-supplier order with an R line, an order with two R suppliers,
+    null supplier keys (on plain and R lines, and an order with only
+    null keys), and orders with no R line at all."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_simulation_spark.plans.tpch_shapes import (
+        SOLE_BLAME_SUPPLIERS_SQL,
+        sole_blame_suppliers,
+    )
+
+    # (l_orderkey, l_suppkey, l_returnflag)
+    lines = [
+        (1, 1, "R"), (1, 1, "N"),                  # one supplier: no blame
+        (2, 1, "R"), (2, 2, "R"), (2, 3, "N"),     # two R suppliers: none
+        (3, 2, "R"), (3, None, "N"),               # null is not a 2nd supplier
+        (4, 3, "R"), (4, 4, "N"), (4, None, "R"),  # null R line: blames 3
+        (5, 1, "N"), (5, 2, "A"),                  # no R line
+        (6, 2, "R"), (6, 2, "N"), (6, 4, "N"),     # blames 2
+        (7, 2, "R"), (7, 1, "A"),                  # blames 2
+        (8, None, "R"), (8, None, "N"),            # only null keys
+    ]
+    lineitem = pa.table(
+        {
+            "l_orderkey": pa.array([o for o, _, _ in lines], pa.int64()),
+            "l_suppkey": pa.array([s for _, s, _ in lines], pa.int64()),
+            "l_returnflag": pa.array([f for _, _, f in lines]),
+        }
+    )
+    supplier = pa.table(
+        {
+            "s_suppkey": pa.array([1, 2, 3, 4], pa.int64()),
+            "s_name": pa.array([f"Supplier#{k}" for k in (1, 2, 3, 4)]),
+        }
+    )
+    pq.write_table(lineitem, str(tmp_path / "lineitem.parquet"))
+    pq.write_table(supplier, str(tmp_path / "supplier.parquet"))
+
+    got = [tuple(r) for r in sole_blame_suppliers(spark, str(tmp_path)).collect()]
+    with duckdb.connect() as con:
+        for t in ("lineitem", "supplier"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"'{tmp_path / (t + '.parquet')}'"
+            )
+        want = con.execute(SOLE_BLAME_SUPPLIERS_SQL).fetchall()
+    assert got == want
+    assert got == [(2, "Supplier#2", 2), (3, "Supplier#3", 1)]
 
 
 def test_minhash_jaccard_estimate_semantics(spark, sf_dir):

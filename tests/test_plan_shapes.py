@@ -389,6 +389,33 @@ def test_sole_blame_scans_lineitem_once(spark, sf_dir):
     )
 
 
+def test_money_units_run_as_rint_not_round(spark, sf_dir):
+    """_money_units is codegen double arithmetic: rint plus an off-grid
+    guard. A round( in the executed plan is the per-row BigDecimal
+    setScale path it replaced."""
+    plan = _plan(spark, sf_dir, "pricing_summary")
+    assert "rint(" in plan, f"pricing_summary: no rint(\n{plan[:2000]}"
+    assert "round(" not in plan, f"pricing_summary: round(\n{plan[:2000]}"
+
+
+def test_sole_blame_profile_is_a_hash_aggregate(spark, sf_dir):
+    """The Q21 per-order profile is four min/max aggregates: fixed-width
+    buffers in a codegen HashAggregate, never an object-hash or sort
+    aggregate over per-order set buffers."""
+    plan = _plan(spark, sf_dir, "sole_blame_suppliers")
+    for op in ("ObjectHashAggregate", "SortAggregate"):
+        assert op not in plan, f"sole_blame_suppliers: {op}\n{plan[:2000]}"
+
+
+@pytest.mark.parametrize("name", ["bm25_topk", "distributed_logreg_train"])
+def test_driver_built_frames_are_jvm_relations(spark, sf_dir, name):
+    """Frames built from driver-side Python values are VALUES relations:
+    an ExistingRDD scan is a createDataFrame(list) whose rows pass
+    through a Python worker on every action."""
+    plan = _plan(spark, sf_dir, name)
+    assert "ExistingRDD" not in plan, f"{name}: ExistingRDD\n{plan[:2000]}"
+
+
 @pytest.mark.parametrize("name", ["bm25_topk", "rrf_hybrid_topk"])
 def test_retrieval_rankings_prefilter_below_window(spark, sf_dir, name):
     """Every per-query ranking in the retrieval family must prefilter each
